@@ -22,17 +22,18 @@ values after sorting columns by name.
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-_REPO = "/root/repo"
+_REPO = os.path.dirname(os.path.abspath(__file__))
 if _REPO not in sys.path:  # kgx importable regardless of the caller's cwd
     sys.path.insert(0, _REPO)
 
-FIXTURE_BASE = "/root/repo/tests/fixtures"
+FIXTURE_BASE = os.path.join(_REPO, "tests", "fixtures")
 _PIPE_CACHE: dict = {}
 _SHIPPED: set = set()
 
@@ -45,7 +46,6 @@ def _ship_kgx(spark: SparkSession) -> None:
     key = id(spark.sparkContext)
     if key in _SHIPPED:
         return
-    import os
     import tempfile
     import zipfile
 

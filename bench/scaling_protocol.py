@@ -9,6 +9,12 @@ sandbox swings ±20% over tens of minutes — cancels to first order in the
 per-rep efficiency ratio instead of biasing one width.  Reports per-rep
 eff, median, and max-min spread.
 
+Each run is one ``bench/pipeline_child.py`` process — the same child
+bench.py's gate pair launches — run with this checkout as cwd and first on
+PYTHONPATH, so the record measures this checkout's kgx (the child reports
+``kgx.__file__`` and a file outside the checkout fails the run).  A failed
+child raises with the last 40 lines of its stderr.
+
 Pass ``--ladder`` to also run the 2- and 8-executor widths once (the
 secondary 2->8 pair is host-ceiling-limited at 16 cores; see BASELINE.md).
 
@@ -32,7 +38,9 @@ import subprocess
 import sys
 import time
 
-REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+import pipeline_child  # bench/pipeline_child.py, next to this file
+
+REPO_ROOT = pipeline_child.ROOT
 sys.path.insert(0, REPO_ROOT)
 
 
@@ -59,25 +67,6 @@ def engine_fingerprint() -> dict:
     except (OSError, subprocess.CalledProcessError):
         return {"git_head": None, "engine_tree": None, "engine_dirty": True}
 
-# NOT an f-string: the child's own {…} must survive; REPO_ROOT is injected
-# via %r substitution below
-CHILD = """
-import json, sys, time
-sys.path.insert(0, %(repo_root)r)
-master, fixture_dir = sys.argv[1], sys.argv[2]
-from kgx.session import get_spark
-from kgx.pipeline import PipelineConfig, run_pipeline
-spark = get_spark("kgx-scaling", master=master, shuffle_partitions=32)
-cfg = PipelineConfig(
-    source_uri=f"{fixture_dir}/source_files.parquet",
-    dict_uri=f"{fixture_dir}/compound_dict.parquet",
-    num_partitions=64,
-)
-t0 = time.monotonic()
-out = run_pipeline(spark, cfg)
-n = out["triples"].count()
-print(json.dumps({"wall_sec": round(time.monotonic() - t0, 2), "triples": n}))
-""" % {"repo_root": REPO_ROOT}
 
 W1 = "local-cluster[1,2,12288]"
 W4 = "local-cluster[4,2,12288]"
@@ -91,14 +80,7 @@ def run_once(master: str, fixture_dir: str, settle: int = 20) -> dict:
     if settle:
         subprocess.run(["sync"], check=False)
         time.sleep(settle)
-    out = subprocess.run(
-        [sys.executable, "-c", CHILD, master, fixture_dir],
-        capture_output=True,
-        text=True,
-        timeout=3600,
-        check=True,
-    )
-    return json.loads(out.stdout.strip().splitlines()[-1])
+    return pipeline_child.run(master, fixture_dir)
 
 
 def main() -> int:

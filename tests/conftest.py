@@ -1,9 +1,11 @@
+import os
+
 import pytest
 
 from kgx.fixtures.gen import ensure
 from kgx.session import get_spark
 
-FIXTURE_BASE = "/root/repo/tests/fixtures"
+FIXTURE_BASE = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures")
 
 
 @pytest.fixture(scope="session")

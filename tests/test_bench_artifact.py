@@ -11,8 +11,11 @@ canned results, so the assembly logic itself is covered by plain pytest.
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 class _DummySpark:
@@ -22,7 +25,7 @@ class _DummySpark:
 
 @pytest.fixture()
 def bench_mod(monkeypatch, tmp_path):
-    import bench as bench_mod  # /root/repo/bench.py (shadows the bench/ dir)
+    import bench as bench_mod  # the root bench.py (shadows the bench/ dir)
 
     # canned pipeline runs: W1/W4 walls chosen so per-rep eff is exact
     walls = {
@@ -164,10 +167,10 @@ def test_committed_records_parse_and_stamped_ones_pass_gate():
     import statistics
     import subprocess
 
-    paths = sorted(glob.glob("/root/repo/bench/records/scaling_*.json"))
+    paths = sorted(glob.glob(os.path.join(ROOT, "bench", "records", "scaling_*.json")))
     assert paths, "scaling records missing from bench/records/"
     head_tree = subprocess.run(
-        ["git", "-C", "/root/repo", "rev-parse", "HEAD:kgx"],
+        ["git", "-C", ROOT, "rev-parse", "HEAD:kgx"],
         capture_output=True,
         text=True,
         check=True,
@@ -197,7 +200,7 @@ def test_committed_records_parse_and_stamped_ones_pass_gate():
     # (Skipped rather than failed while kgx/ has uncommitted edits: the
     # protocol stamps the tree it measured, which is unknowable mid-edit.)
     dirty = subprocess.run(
-        ["git", "-C", "/root/repo", "status", "--porcelain", "--", "kgx"],
+        ["git", "-C", ROOT, "status", "--porcelain", "--", "kgx"],
         capture_output=True,
         text=True,
         check=True,

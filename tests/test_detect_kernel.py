@@ -3,7 +3,6 @@
 import pandas as pd
 import pytest
 
-from kgx.fixtures.gen import ensure
 from kgx.io.dictionary import detection_index
 from kgx.stages.detect import detect_in_text
 
@@ -79,11 +78,10 @@ def test_abbreviation_not_bound_in_other_doc():
     assert spans("# add DMSO now") == []
 
 
-def test_kernel_matches_golden_exactly_on_tiny():
-    d = ensure("tiny", "/root/repo/tests/fixtures")
-    dict_pdf = pd.read_parquet(f"{d}/compound_dict.parquet")
-    sf = pd.read_parquet(f"{d}/source_files.parquet")
-    gm = pd.read_parquet(f"{d}/golden_mentions.parquet")
+def test_kernel_matches_golden_exactly_on_tiny(tiny_dir):
+    dict_pdf = pd.read_parquet(f"{tiny_dir}/compound_dict.parquet")
+    sf = pd.read_parquet(f"{tiny_dir}/source_files.parquet")
+    gm = pd.read_parquet(f"{tiny_dir}/golden_mentions.parquet")
     idx = detection_index(dict_pdf)
     latest = sf.sort_values(["repo", "path", "commit"]).groupby(["repo", "path"]).tail(1)
     det = set()

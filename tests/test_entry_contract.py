@@ -1,8 +1,9 @@
 """Driver-contract invariants for __spark_entry__ (SURVEY §3.3/§3.4)."""
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
 

@@ -16,86 +16,56 @@ subprocesses):
    /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS], each forced with the
    noop sink (full execution, no collect-to-driver); then a steady-state
    second pass in the same session (``queries_steady``).
-2. KG pipeline end-to-end on the synthesized 'scaling3' corpus (7.2M
-   files, FIXTURES.md) at ``local-cluster[1,2,12288]`` vs
-   ``local-cluster[4,2,12288]`` — separate JVM trees (one
-   ``bench/pipeline_child.py`` process per run, importing this checkout's
-   kgx), identical job config and identical per-executor shape (2 cores,
-   12 GiB); only the executor COUNT varies, exactly the north rule's "N and
-   4N executors" criterion:
-     eff(N→4N) = (T_N / T_4N) / 4
-   The gate pair runs as KGX_BENCH_REPS (default 3 — round 4 proved a
-   2-rep median flips on one drifted pair) back-to-back repeats with
-   ALTERNATING order — this host's throughput drifts ±10-20% on
-   sustained wide runs, so a single pair is a coin-flip and the protocol
-   median is the estimator (full ≥5-rep runs + the 2/8-executor ladder
-   live in bench/scaling_protocol.py, which launches the same child;
-   committed raw records under bench/records/ are pooled into
-   ``scaling_efficiency_pooled`` so the artifact carries the full-sample
-   number alongside the in-run spot check).  The local[32] single-JVM
-   headline run (+P/R) happens BEFORE the executor ladder: round 4 recorded
-   it LAST, after ~40 min of sustained wide subprocesses, and a host slow
-   phase inflated it 1.9× over a quiet-host rerun of the same tree.
-   Thread-width local[N] single-JVM numbers are NOT used for the gate: a
-   shared heap makes GC degrade with width (measured 10 s task-GC at
-   local[2] vs 148 s at local[8], same work) — an artifact a real
-   multi-executor cluster does not have, which local-cluster's per-executor
-   JVMs remove.
+2. KG pipeline end-to-end on the gate corpus (``scaling3``, 7.2M files,
+   FIXTURES.md): a local[32] single-JVM headline run (+P/R), then the N->4N
+   gate pair.  bench/scaling_protocol.py owns the gate — its executor pair,
+   the alternating-order rep loop, the settle, the corpus, the engine stamp
+   and the record pool — and this script calls it.  Every run is one
+   ``bench/pipeline_child.py`` process importing this checkout's kgx,
+   started after a ``sync`` and one 20 s settle outside the timed window.
+   The pair runs KGX_BENCH_REPS (default 3 — round 4 proved a 2-rep median
+   flips on one drifted pair) reps; the in-run median is a spot check, and
+   ``scaling_efficiency_pooled`` adds every committed ``bench/records/``
+   record of the same corpus and engine tree (none while kgx/ has
+   uncommitted edits: ``engine_dirty``).  The headline runs BEFORE the
+   pair: round 4 recorded it LAST, after ~40 min of sustained wide
+   subprocesses, and a host slow phase inflated it 1.9× over a quiet-host
+   rerun of the same tree.  Thread-width local[N] single-JVM numbers are
+   NOT used for the gate: a shared heap makes GC degrade with width
+   (measured 10 s task-GC at local[2] vs 148 s at local[8], same work) — an
+   artifact a real multi-executor cluster does not have, which
+   local-cluster's per-executor JVMs remove.
 
 A failed pipeline child raises with the last 40 lines of its stderr.
 
 Environment: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, KGX_BENCH_SCALE
-(fixture scale, default "scaling3"), KGX_BENCH_REPS, KGX_SKIP_SCALING=1
-to skip part 2's executor ladder (runs local[$CPUS] only, on the 'bench'
-corpus), KGX_QUERY_MEM (relational-session heap, default 24g).
+(fixture scale, default the gate corpus), KGX_BENCH_REPS,
+KGX_SKIP_SCALING=1 to skip part 2's gate pair (runs local[$CPUS] only, on
+the 'bench' corpus), KGX_QUERY_MEM (relational-session heap, default 24g).
 """
 
 from __future__ import annotations
 
 import json
 import os
-import subprocess
+import statistics
 import sys
 import time
 
 ROOT = os.path.dirname(os.path.abspath(__file__))
 sys.path[:0] = [ROOT, os.path.join(ROOT, "bench")]
 
-import pipeline_child  # noqa: E402  (bench/pipeline_child.py)
+import scaling_protocol  # noqa: E402  (bench/scaling_protocol.py)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 _SKIP_SCALING = os.environ.get("KGX_SKIP_SCALING") == "1"
-# scaling3 (7.2M files) is the gate corpus as of round 3: the round-2/3
-# speedups shrank the parallel fraction on smaller corpora below what a
-# >=0.8 1->4-executor efficiency needs at fixed serial cost (BASELINE.md
-# SCALES sizing rule: more data per executor, not code, restores it)
-BENCH_SCALE = os.environ.get("KGX_BENCH_SCALE", "bench" if _SKIP_SCALING else "scaling3")
+BENCH_SCALE = os.environ.get(
+    "KGX_BENCH_SCALE", "bench" if _SKIP_SCALING else scaling_protocol.GATE_SCALE
+)
 BENCH_REPS = int(os.environ.get("KGX_BENCH_REPS", "3"))
-RECORDS_DIR = os.path.join(ROOT, "bench", "records")
 
-
-def _current_engine_tree() -> str | None:
-    """Tree hash of the committed kgx/ package (``git rev-parse HEAD:kgx``)
-    — the engine identity pooled scaling records must match.  Doc/bench
-    commits don't perturb it; any engine change does.  None if git is
-    unavailable (pooling then uses only this run's reps)."""
-    try:
-        return subprocess.run(
-            ["git", "-C", ROOT, "rev-parse", "HEAD:kgx"],
-            capture_output=True,
-            text=True,
-            check=True,
-        ).stdout.strip()
-    except (OSError, subprocess.CalledProcessError):
-        return None
-
-
-def _pipeline_at(master: str, fixture_dir: str, with_pr: bool = False) -> dict:
-    # flush the previous run's dirty shuffle pages out of the timed window
-    subprocess.run(["sync"], check=False)
-    time.sleep(15)
-    return pipeline_child.run(master, fixture_dir, with_pr=with_pr)
+_pipeline_at = scaling_protocol.run_once
 
 
 def _warm_page_cache(sf_dir: str) -> None:
@@ -171,74 +141,36 @@ def main() -> int:
 
     pipeline: dict = {"fixture_scale": BENCH_SCALE}
     if not _SKIP_SCALING:
-        import statistics
-
         # local[32] headline FIRST (fresh host window — same reason the
         # relational suite runs first): the round-4 artifact ran it after
         # ~40 min of wide subprocesses and recorded a 1.9×-inflated wall
         t32 = _pipeline_at("local[32]", fixture_dir, with_pr=True)
-
-        # the north-rule gate pair: N=1 vs 4N=4 executors, fixed 2-core/12g
-        # executor shape, alternating order per rep (drift cancellation)
-        w1, w4 = "local-cluster[1,2,12288]", "local-cluster[4,2,12288]"
-        walls: dict[str, list] = {w1: [], w4: []}
-        effs = []
-        for rep in range(BENCH_REPS):
-            order = (w1, w4) if rep % 2 == 0 else (w4, w1)
-            rep_r = {}
-            for w in order:
-                rep_r[w] = _pipeline_at(w, fixture_dir)
-                walls[w].append(rep_r[w])
-            effs.append(rep_r[w1]["wall_sec"] / rep_r[w4]["wall_sec"] / 4)
-
+        results, effs, _ = scaling_protocol.gate_pair(_pipeline_at, fixture_dir, BENCH_REPS)
+        w1, w4 = results[scaling_protocol.W1], results[scaling_protocol.W4]
+        # pooled estimator: this run's reps + every committed protocol
+        # record of the same corpus AND engine — a full-sample median that
+        # no single drifted pair can flip and no older engine's healthy
+        # reps can prop up
+        fingerprint = scaling_protocol.engine_fingerprint()
+        rec_effs, pooled_files, excluded_files = scaling_protocol.pooled(
+            scaling_protocol.RECORDS_DIR, BENCH_SCALE, fingerprint
+        )
+        pooled = effs + rec_effs
         pipeline.update(
             {
-                "exec1x2c": walls[w1][-1],
-                "exec4x2c": walls[w4][-1],
-                "exec1x2c_walls": [r["wall_sec"] for r in walls[w1]],
-                "exec4x2c_walls": [r["wall_sec"] for r in walls[w4]],
+                "exec1x2c": w1[-1],
+                "exec4x2c": w4[-1],
+                "exec1x2c_walls": [r["wall_sec"] for r in w1],
+                "exec4x2c_walls": [r["wall_sec"] for r in w4],
                 "local32": t32,
                 "scaling_efficiency_per_rep": [round(e, 3) for e in effs],
                 "scaling_efficiency_exec_1_to_4": round(statistics.median(effs), 3),
-            }
-        )
-        # pooled estimator: this run's reps + every committed protocol
-        # record for the same corpus AND the same engine (bench/records/
-        # *.json, written by bench/scaling_protocol.py) — the full-sample
-        # median no single drifted pair can flip.  Records are stamped with
-        # the kgx/ git tree hash at measurement time (round-5 advice):
-        # records of an OLDER engine are excluded so a scaling regression
-        # in the shipped tree can't hide behind healthy historical reps.
-        pooled, pooled_files, excluded_files = list(effs), [], []
-        engine_tree = _current_engine_tree()
-        if os.path.isdir(RECORDS_DIR):
-            for fn in sorted(os.listdir(RECORDS_DIR)):
-                if not fn.endswith(".json"):
-                    continue
-                try:
-                    with open(os.path.join(RECORDS_DIR, fn)) as f:
-                        rec = json.load(f)
-                    if rec.get("scale") != BENCH_SCALE:
-                        continue
-                    same_engine = (
-                        rec.get("engine_tree") is not None
-                        and rec.get("engine_tree") == engine_tree
-                        and not rec.get("engine_dirty")
-                    )
-                    if same_engine:
-                        pooled.extend(rec["eff_exec_1_to_4"]["per_rep"])
-                        pooled_files.append(fn)
-                    else:
-                        excluded_files.append(fn)
-                except (OSError, KeyError, ValueError):
-                    continue  # a malformed record must not sink the bench
-        pipeline.update(
-            {
                 "scaling_efficiency_pooled": round(statistics.median(pooled), 3),
                 "scaling_efficiency_pooled_n": len(pooled),
                 "scaling_efficiency_pooled_records": pooled_files,
                 "scaling_efficiency_excluded_records": excluded_files,
-                "engine_tree": engine_tree,
+                "engine_tree": fingerprint["engine_tree"],
+                "engine_dirty": fingerprint["engine_dirty"],
             }
         )
         report["value"] = t32["wall_sec"]

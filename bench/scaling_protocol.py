@@ -1,32 +1,34 @@
-"""Scaling-gate evidence runner (BASELINE.md protocol; north_rule's N->4N
-criterion evidenced in-sandbox as executor counts on one host).
+"""The N->4N scaling gate (BASELINE.md protocol; the north rule's N->4N
+criterion evidenced on one host as executor counts).  This module is the
+gate's one owner: its executor pair, rep loop, settle, corpus, engine stamp
+and record pool.  bench.py runs the gate through it; run directly, it writes
+a record.
 
-Gate pair: local-cluster[1,2,12288] vs local-cluster[4,2,12288] — real
-separate executor JVMs, fixed 2-core/12g shape, only the COUNT varies
-(the rule's "N and 4N executors").  Each rep runs the pair back-to-back
-with ALTERNATING order (1,4 / 4,1 / ...) so slow host drift — this
-sandbox swings ±20% over tens of minutes — cancels to first order in the
-per-rep efficiency ratio instead of biasing one width.  Reports per-rep
-eff, median, and max-min spread.
+Gate pair: ``W1`` = local-cluster[1,2,12288] vs ``W4`` =
+local-cluster[4,2,12288] — real separate executor JVMs, fixed 2-core/12g
+shape, only the COUNT varies (the rule's "N and 4N executors"):
+  eff(N→4N) = (T_N / T_4N) / 4
+:func:`gate_pair` runs each rep's pair back-to-back with ALTERNATING order
+(1,4 / 4,1 / ...) so slow host drift — a shared host swings ±20% over tens
+of minutes — cancels to first order in the per-rep efficiency ratio instead
+of biasing one width.  Reports per-rep eff, median, and max-min spread.
 
-Each run is one ``bench/pipeline_child.py`` process — the same child
-bench.py's gate pair launches — run with this checkout as cwd and first on
-PYTHONPATH, so the record measures this checkout's kgx (the child reports
+Each run is one ``bench/pipeline_child.py`` process launched by
+:func:`run_once` after a ``sync`` and a 20 s settle, both outside the timed
+window.  The child runs with this checkout as cwd and first on PYTHONPATH,
+so the record measures this checkout's kgx (the child reports
 ``kgx.__file__`` and a file outside the checkout fails the run).  A failed
 child raises with the last 40 lines of its stderr.
 
-Pass ``--ladder`` to also run the 2- and 8-executor widths once (the
-secondary 2->8 pair is host-ceiling-limited at 16 cores; see BASELINE.md).
-
 Every run writes its raw report (per-rep walls, run order, wall-clock
-timestamps) to ``bench/records/scaling_<scale>_<stamp>.json`` — committed
-records are the auditable evidence pool behind bench.py's
-``scaling_efficiency_pooled`` field (/tmp does not survive the sandbox;
-round-4's 9-rep sample lived only in BASELINE.md tables).  ``--no-record``
-skips the write (for throwaway probes).
+timestamps, :func:`engine_fingerprint`) to
+``bench/records/scaling_<scale>_<stamp>.json`` — committed records are the
+auditable evidence pool that :func:`pooled` reads back for bench.py's
+``scaling_efficiency_pooled`` field.  ``--no-record`` skips the write (for
+throwaway probes).
 
-Usage: python bench/scaling_protocol.py [repeats=3] [scale=scaling]
-       [--ladder] [--no-record]
+Usage: python bench/scaling_protocol.py [repeats=3] [scale=scaling3]
+       [--no-record]
 """
 
 from __future__ import annotations
@@ -42,6 +44,16 @@ import pipeline_child  # bench/pipeline_child.py, next to this file
 
 REPO_ROOT = pipeline_child.ROOT
 sys.path.insert(0, REPO_ROOT)
+
+RECORDS_DIR = os.path.join(REPO_ROOT, "bench", "records")
+# scaling3 (7.2M files) is the gate corpus as of round 3: the round-2/3
+# speedups shrank the parallel fraction on smaller corpora below what a
+# >=0.8 1->4-executor efficiency needs at fixed serial cost (BASELINE.md
+# SCALES sizing rule: more data per executor, not code, restores it)
+GATE_SCALE = "scaling3"
+W1 = "local-cluster[1,2,12288]"
+W4 = "local-cluster[4,2,12288]"
+SETTLE_S = 20
 
 
 def engine_fingerprint() -> dict:
@@ -68,44 +80,29 @@ def engine_fingerprint() -> dict:
         return {"git_head": None, "engine_tree": None, "engine_dirty": True}
 
 
-W1 = "local-cluster[1,2,12288]"
-W4 = "local-cluster[4,2,12288]"
-LADDER = ("local-cluster[2,2,12288]", "local-cluster[8,2,12288]")
-
-
-def run_once(master: str, fixture_dir: str, settle: int = 20) -> dict:
+def run_once(master: str, fixture_dir: str, with_pr: bool = False) -> dict:
     # measurement hygiene: flush the PREVIOUS run's dirty shuffle pages and
     # let the host settle before timing — otherwise run k's writeback bills
     # run k+1 (the observed first-wide-run-after-idle-is-fast pattern)
-    if settle:
-        subprocess.run(["sync"], check=False)
-        time.sleep(settle)
-    return pipeline_child.run(master, fixture_dir)
+    subprocess.run(["sync"], check=False)
+    time.sleep(SETTLE_S)
+    return pipeline_child.run(master, fixture_dir, with_pr=with_pr)
 
 
-def main() -> int:
-    flags = {a for a in sys.argv[1:] if a.startswith("--")}
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    ladder = "--ladder" in flags
-    record = "--no-record" not in flags
-    repeats = int(args[0]) if len(args) > 0 else 3
-    scale = args[1] if len(args) > 1 else "scaling"
-    from kgx.fixtures.gen import ensure
-
-    fixture_dir = str(ensure(scale, os.path.join(REPO_ROOT, "tests", "fixtures")))
-
-    walls: dict[str, list[float]] = {W1: [], W4: []}
+def gate_pair(run, fixture_dir: str, reps: int) -> tuple[dict, list, list]:
+    """Run the W1/W4 pair ``reps`` times as ``run(master, fixture_dir)``,
+    alternating the order per rep.  Returns each width's results in run
+    order, the per-rep eff(1→4), and a flat audit trail (rep, master, start
+    time, wall, triples) of every run."""
+    results: dict[str, list[dict]] = {W1: [], W4: []}
     effs: list[float] = []
-    runs: list[dict] = []  # flat audit trail: order + timestamps per run
-    for rep in range(repeats):
-        order = (W1, W4) if rep % 2 == 0 else (W4, W1)
-        rep_walls = {}
-        for w in order:
+    runs: list[dict] = []
+    for rep in range(reps):
+        for w in (W1, W4) if rep % 2 == 0 else (W4, W1):
             started = time.strftime("%Y-%m-%dT%H:%M:%S")
             t0 = time.monotonic()
-            r = run_once(w, fixture_dir)
-            rep_walls[w] = r["wall_sec"]
-            walls[w].append(r["wall_sec"])
+            r = run(w, fixture_dir)
+            results[w].append(r)
             runs.append(
                 {
                     "rep": rep + 1,
@@ -116,12 +113,58 @@ def main() -> int:
                 }
             )
             print(
-                f"rep {rep + 1}/{repeats} {w:26s} wall={r['wall_sec']:8.2f}s "
+                f"rep {rep + 1}/{reps} {w:26s} wall={r['wall_sec']:8.2f}s "
                 f"triples={r['triples']} (run took {time.monotonic() - t0:.0f}s)",
                 file=sys.stderr,
                 flush=True,
             )
-        effs.append(rep_walls[W1] / rep_walls[W4] / 4)
+        effs.append(results[W1][-1]["wall_sec"] / results[W4][-1]["wall_sec"] / 4)
+    return results, effs, runs
+
+
+def pooled(records_dir: str, scale: str, fingerprint: dict) -> tuple[list, list, list]:
+    """Per-rep effs of the records in ``records_dir`` that measure the
+    engine of ``fingerprint`` at ``scale``, with the names of the files
+    pooled and of the same-scale files excluded.  A record is pooled only if
+    it carries the same engine tree and was not measured on a dirty kgx/;
+    while ``fingerprint`` itself is dirty, no record is.  Records of another
+    scale are ignored, and malformed files are skipped."""
+    current = None if fingerprint["engine_dirty"] else fingerprint["engine_tree"]
+    per_rep, pooled_files, excluded_files = [], [], []
+    names = sorted(os.listdir(records_dir)) if os.path.isdir(records_dir) else []
+    for fn in names:
+        if not fn.endswith(".json"):
+            continue
+        try:
+            with open(os.path.join(records_dir, fn)) as f:
+                rec = json.load(f)
+            if rec.get("scale") != scale:
+                continue
+            if (
+                current is not None
+                and rec.get("engine_tree") == current
+                and not rec.get("engine_dirty")
+            ):
+                per_rep.extend(rec["eff_exec_1_to_4"]["per_rep"])
+                pooled_files.append(fn)
+            else:
+                excluded_files.append(fn)
+        except (OSError, KeyError, ValueError):
+            continue  # a malformed record must not sink the bench
+    return per_rep, pooled_files, excluded_files
+
+
+def main() -> int:
+    flags = {a for a in sys.argv[1:] if a.startswith("--")}
+    args = [a for a in sys.argv[1:] if not a.startswith("--")]
+    record = "--no-record" not in flags
+    repeats = int(args[0]) if len(args) > 0 else 3
+    scale = args[1] if len(args) > 1 else GATE_SCALE
+    from kgx.fixtures.gen import ensure
+
+    fixture_dir = str(ensure(scale, os.path.join(REPO_ROOT, "tests", "fixtures")))
+    results, effs, runs = gate_pair(run_once, fixture_dir, repeats)
+    walls = {w: [r["wall_sec"] for r in rs] for w, rs in results.items()}
 
     report = {
         "scale": scale,
@@ -137,18 +180,11 @@ def main() -> int:
         },
         "runs": runs,
     }
-    if ladder:
-        report["ladder"] = {w: run_once(w, fixture_dir) for w in LADDER}
-        report["eff_exec_2_to_8"] = round(
-            report["ladder"][LADDER[0]]["wall_sec"]
-            / report["ladder"][LADDER[1]]["wall_sec"]
-            / 4,
-            3,
-        )
     if record:
-        rec_dir = os.path.join(REPO_ROOT, "bench", "records")
-        os.makedirs(rec_dir, exist_ok=True)
-        path = f"{rec_dir}/scaling_{scale}_{time.strftime('%Y%m%d_%H%M%S')}.json"
+        os.makedirs(RECORDS_DIR, exist_ok=True)
+        path = os.path.join(
+            RECORDS_DIR, f"scaling_{scale}_{time.strftime('%Y%m%d_%H%M%S')}.json"
+        )
         with open(path, "w") as f:
             json.dump(report, f, indent=2)
         print(f"record written: {path}", file=sys.stderr)

@@ -52,8 +52,14 @@ def bench_mod(monkeypatch, tmp_path):
     import kgx.fixtures.gen
 
     monkeypatch.setattr(kgx.fixtures.gen, "ensure", lambda scale, root: tmp_path)
-    monkeypatch.setattr(bench_mod, "RECORDS_DIR", str(tmp_path / "records"))
-    monkeypatch.setattr(bench_mod, "_current_engine_tree", lambda: "tree-current")
+    import scaling_protocol  # bench/scaling_protocol.py, on sys.path via bench
+
+    monkeypatch.setattr(scaling_protocol, "RECORDS_DIR", str(tmp_path / "records"))
+    monkeypatch.setattr(
+        scaling_protocol,
+        "engine_fingerprint",
+        lambda: {"git_head": "head", "engine_tree": "tree-current", "engine_dirty": False},
+    )
     bench_mod._TEST_CALLS = calls  # type: ignore[attr-defined]
     return bench_mod
 
@@ -158,6 +164,62 @@ def test_pooling_reads_committed_records(bench_mod, capsys, tmp_path):
         statistics.median([0.8] * n + [0.9, 0.9, 0.9]), 3
     )
 
+
+
+def test_dirty_engine_pools_only_in_run_reps(bench_mod, capsys, tmp_path, monkeypatch):
+    # uncommitted kgx/ edits: the in-run reps measure the edited code, so no
+    # record of the committed tree may join them — every one is excluded
+    import scaling_protocol
+
+    monkeypatch.setattr(
+        scaling_protocol,
+        "engine_fingerprint",
+        lambda: {"git_head": "head", "engine_tree": "tree-current", "engine_dirty": True},
+    )
+    rec_dir = tmp_path / "records"
+    rec_dir.mkdir()
+    for name, tree in (("scaling_match.json", "tree-current"), ("scaling_stale.json", "tree-old")):
+        (rec_dir / name).write_text(
+            json.dumps(
+                {
+                    "scale": bench_mod.BENCH_SCALE,
+                    "engine_tree": tree,
+                    "engine_dirty": False,
+                    "eff_exec_1_to_4": {"per_rep": [0.9, 0.9, 0.9]},
+                }
+            )
+        )
+    pipe = _run_main(bench_mod, capsys)["pipeline"]
+    assert pipe["engine_dirty"] is True
+    assert pipe["scaling_efficiency_pooled_n"] == bench_mod.BENCH_REPS
+    assert pipe["scaling_efficiency_pooled"] == 0.8
+    assert pipe["scaling_efficiency_pooled_records"] == []
+    assert pipe["scaling_efficiency_excluded_records"] == [
+        "scaling_match.json",
+        "scaling_stale.json",
+    ]
+
+
+def test_protocol_record_round_trips_into_bench_pool(bench_mod, capsys, tmp_path, monkeypatch):
+    # the record writer (scaling_protocol.main) and its reader (bench.main
+    # via scaling_protocol.pooled) must agree on location, scale and fields;
+    # the protocol runs on its default corpus, which must be bench's
+    import sys
+
+    import scaling_protocol
+
+    monkeypatch.setattr(scaling_protocol, "run_once", bench_mod._pipeline_at)
+    monkeypatch.setattr(scaling_protocol.time, "sleep", lambda s: None)
+    monkeypatch.setattr(sys, "argv", ["scaling_protocol.py", "2"])
+    assert scaling_protocol.main() == 0
+    written = json.loads(capsys.readouterr().out)
+    assert written["scale"] == bench_mod.BENCH_SCALE
+    records = sorted(p.name for p in (tmp_path / "records").iterdir())
+    assert len(records) == 1
+    pipe = _run_main(bench_mod, capsys)["pipeline"]
+    assert pipe["scaling_efficiency_pooled_records"] == records
+    assert pipe["scaling_efficiency_excluded_records"] == []
+    assert pipe["scaling_efficiency_pooled_n"] == bench_mod.BENCH_REPS + 2
 
 def test_committed_records_parse_and_stamped_ones_pass_gate():
     """Every committed record must parse; any record stamped with the

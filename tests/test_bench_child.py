@@ -66,9 +66,9 @@ def test_bench_and_scaling_protocol_launch_the_same_child(children, monkeypatch)
         return subprocess.CompletedProcess(argv, 0, stdout=json.dumps(out), stderr="")
 
     monkeypatch.setattr(subprocess, "run", fake_run)
-    monkeypatch.setattr(bench.time, "sleep", lambda s: None)
+    monkeypatch.setattr(scaling_protocol.time, "sleep", lambda s: None)
     bench._pipeline_at("local-cluster[1,2,12288]", "/fx")
-    scaling_protocol.run_once("local-cluster[1,2,12288]", "/fx", settle=0)
+    scaling_protocol.run_once("local-cluster[1,2,12288]", "/fx")
     assert launched[0] == launched[1]
     assert launched[0][1] == os.path.join(ROOT, "bench", "pipeline_child.py")
 

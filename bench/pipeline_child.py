@@ -1,5 +1,5 @@
-"""One KG-pipeline run in a fresh process — the child behind bench.py's
-headline and N->4N gate pair and bench/scaling_protocol.py's records.
+"""One KG-pipeline run in a fresh process — the child behind each run of
+bench/scaling_protocol.py's N->4N gate pair.
 
     python bench/pipeline_child.py <master> <fixture_dir> [--pr]
 
@@ -10,10 +10,10 @@ comparison), forces stage 4 with one ``count`` and prints one JSON line:
 driver imported kgx from).  ``--pr`` adds precision/recall against the
 fixture's golden triples, computed outside the timed window.
 
-Callers go through :func:`run`, which launches this file with the checkout
-root as cwd and first on ``PYTHONPATH`` — so the driver and the ``local[N]``
-python workers import the checkout's kgx — and rejects a result whose kgx
-lies outside the root.
+The protocol goes through :func:`run`, which launches this file with the
+checkout root as cwd and first on ``PYTHONPATH`` — so the driver and the
+``local[N]`` python workers import the checkout's kgx — and rejects a
+result whose kgx lies outside the root.
 """
 
 from __future__ import annotations

@@ -59,7 +59,7 @@ def main() -> int:
     from kgx.session import get_spark
 
     fixture_dir = ensure(scale, os.path.join(REPO_ROOT, "tests", "fixtures"))
-    spark = get_spark("precision-tail", master="local[32]")
+    spark = get_spark("precision-tail", master=f"local[{os.cpu_count()}]")
 
     cfg = PipelineConfig(
         source_uri=f"{fixture_dir}/source_files.parquet",

@@ -1,8 +1,7 @@
 """The N->4N scaling gate (BASELINE.md protocol; the north rule's N->4N
 criterion evidenced on one host as executor counts).  This module is the
-gate's one owner: its executor pair, rep loop, settle, corpus, engine stamp
-and record pool.  bench.py runs the gate through it; run directly, it writes
-a record.
+gate's one owner: its executor pair, rep loop, settle, corpus, engine stamp,
+record pool and pooled verdict.
 
 Gate pair: ``W1`` = local-cluster[1,2,12288] vs ``W4`` =
 local-cluster[4,2,12288] — real separate executor JVMs, fixed 2-core/12g
@@ -22,10 +21,13 @@ child raises with the last 40 lines of its stderr.
 
 Every run writes its raw report (per-rep walls, run order, wall-clock
 timestamps, :func:`engine_fingerprint`) to
-``bench/records/scaling_<scale>_<stamp>.json`` — committed records are the
-auditable evidence pool that :func:`pooled` reads back for bench.py's
-``scaling_efficiency_pooled`` field.  ``--no-record`` skips the write (for
-throwaway probes).
+``bench/records/scaling_<scale>_<stamp>.json``; ``--no-record`` skips the
+write (for throwaway probes).  The printed report adds ``pooled``, the
+gate's decision statistic: the median eff over this run's reps plus every
+record :func:`pooled` accepts (same corpus, same committed engine tree),
+read before this run's record is written — a full-sample median that no
+single drifted pair can flip and no older engine's reps can prop up.  While
+kgx/ has uncommitted edits no record is pooled (``engine_dirty``).
 
 Usage: python bench/scaling_protocol.py [repeats=3] [scale=scaling3]
        [--no-record]
@@ -138,19 +140,20 @@ def pooled(records_dir: str, scale: str, fingerprint: dict) -> tuple[list, list,
         try:
             with open(os.path.join(records_dir, fn)) as f:
                 rec = json.load(f)
-            if rec.get("scale") != scale:
+            if not isinstance(rec, dict) or rec.get("scale") != scale:
                 continue
             if (
                 current is not None
                 and rec.get("engine_tree") == current
                 and not rec.get("engine_dirty")
             ):
-                per_rep.extend(rec["eff_exec_1_to_4"]["per_rep"])
+                # built in full first: a bad entry must not pool part of a record
+                per_rep.extend([float(e) for e in rec["eff_exec_1_to_4"]["per_rep"]])
                 pooled_files.append(fn)
             else:
                 excluded_files.append(fn)
-        except (OSError, KeyError, ValueError):
-            continue  # a malformed record must not sink the bench
+        except (OSError, KeyError, TypeError, ValueError):
+            continue  # a malformed record must not sink the gate
     return per_rep, pooled_files, excluded_files
 
 
@@ -160,15 +163,25 @@ def main() -> int:
     record = "--no-record" not in flags
     repeats = int(args[0]) if len(args) > 0 else 3
     scale = args[1] if len(args) > 1 else GATE_SCALE
+    if repeats < 1:
+        # before ensure(): generating scaling3 alone writes ~7.8 GB
+        print(
+            f"repeats must be >= 1, got {repeats}\nusage: python "
+            "bench/scaling_protocol.py [repeats=3] [scale=scaling3] [--no-record]",
+            file=sys.stderr,
+        )
+        return 2
     from kgx.fixtures.gen import ensure
 
     fixture_dir = str(ensure(scale, os.path.join(REPO_ROOT, "tests", "fixtures")))
     results, effs, runs = gate_pair(run_once, fixture_dir, repeats)
     walls = {w: [r["wall_sec"] for r in rs] for w, rs in results.items()}
+    fingerprint = engine_fingerprint()
+    rec_effs, pooled_files, excluded_files = pooled(RECORDS_DIR, scale, fingerprint)
 
     report = {
         "scale": scale,
-        **engine_fingerprint(),
+        **fingerprint,
         "repeats": repeats,
         "pair": {"N": W1, "4N": W4},
         "wall_sec": walls,
@@ -188,7 +201,16 @@ def main() -> int:
         with open(path, "w") as f:
             json.dump(report, f, indent=2)
         print(f"record written: {path}", file=sys.stderr)
-    print(json.dumps(report, indent=2))
+    # the record keeps only this run's measurements; the pooled verdict is
+    # printed, and recomputed from the records by every later run
+    pool = effs + rec_effs
+    verdict = {
+        "median": round(statistics.median(pool), 3),
+        "n": len(pool),
+        "records": pooled_files,
+        "excluded": excluded_files,
+    }
+    print(json.dumps({**report, "pooled": verdict}, indent=2))
     return 0
 
 

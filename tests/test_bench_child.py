@@ -1,8 +1,8 @@
 """The bench pipeline child (bench/pipeline_child.py) and the checkout root.
 
-bench.py's gate pair and bench/scaling_protocol.py must measure the kgx of
-the checkout they live in, through one child script, and a failed child
-must surface its traceback instead of a bare exit status.
+bench/scaling_protocol.py's gate pair must measure the kgx of the checkout
+it lives in, through one child script, and a failed child must surface its
+traceback instead of a bare exit status.
 """
 
 from __future__ import annotations
@@ -36,15 +36,14 @@ def test_no_literal_checkout_path():
 @pytest.fixture()
 def children(monkeypatch):
     monkeypatch.syspath_prepend(os.path.join(ROOT, "bench"))
-    import bench
     import pipeline_child
     import scaling_protocol
 
-    return bench, pipeline_child, scaling_protocol
+    return pipeline_child, scaling_protocol
 
 
 def test_failed_child_raises_with_its_traceback(children, monkeypatch, tmp_path):
-    _, pipeline_child, _ = children
+    pipeline_child, _ = children
     monkeypatch.setenv("KGX_SESSION_WARM", "0")  # the failure, not the warm-up
     with pytest.raises(RuntimeError) as exc:
         pipeline_child.run("local[1]", str(tmp_path / "missing"))
@@ -53,8 +52,8 @@ def test_failed_child_raises_with_its_traceback(children, monkeypatch, tmp_path)
     assert "PATH_NOT_FOUND" in msg
 
 
-def test_bench_and_scaling_protocol_launch_the_same_child(children, monkeypatch):
-    bench, pipeline_child, scaling_protocol = children
+def test_run_once_launches_the_child_from_the_checkout(children, monkeypatch):
+    _, scaling_protocol = children
     launched = []
 
     def fake_run(argv, **kw):
@@ -67,14 +66,13 @@ def test_bench_and_scaling_protocol_launch_the_same_child(children, monkeypatch)
 
     monkeypatch.setattr(subprocess, "run", fake_run)
     monkeypatch.setattr(scaling_protocol.time, "sleep", lambda s: None)
-    bench._pipeline_at("local-cluster[1,2,12288]", "/fx")
     scaling_protocol.run_once("local-cluster[1,2,12288]", "/fx")
-    assert launched[0] == launched[1]
+    assert len(launched) == 1
     assert launched[0][1] == os.path.join(ROOT, "bench", "pipeline_child.py")
 
 
 def test_child_importing_foreign_kgx_is_rejected(children, monkeypatch):
-    _, pipeline_child, _ = children
+    pipeline_child, _ = children
     out = {"wall_sec": 1.0, "triples": 1, "kgx": "/elsewhere/kgx/__init__.py"}
     monkeypatch.setattr(
         subprocess,
